@@ -38,6 +38,7 @@ from lachesis_spark.functions import vectors as V
 from lachesis_spark.binding import base_table
 
 from lachesis_spark.operators.core import barrier as _barrier
+from lachesis_spark.operators.core import checkpoint_single, fits_single_partition
 
 N_BANDS = 8
 SHINGLE_N = 3
@@ -479,12 +480,6 @@ def _minhash_pairs_raw(spark, sf_dir):
 # enough (≤ 2·pairs rows of two longs ≈ 64 MB worst-case) to broadcast
 # per sweep; above it, sweeps take the co-partitioned shuffle plan
 CC_BROADCAST_PAIR_LIMIT = 2_000_000
-# Pair sets at or under this many (doubled, undirected) edges run the
-# cc_converged loop on a single stats-clamped partition: ≤ ~2 MB of edge
-# rows per sweep task (~12 MB), where exchange-free narrow sweeps beat any
-# parallel plan (job launch dominates).  Bigger sets keep the
-# broadcast/shuffle regimes.
-CC_SINGLE_PARTITION_EDGE_LIMIT = 1 << 19
 # Convergence-probe cadence for cc_converged: sweeps run lazily in
 # chunks of this size with ONE probe job per chunk (see the loop note).
 CC_SWEEPS_PER_PROBE = 2
@@ -552,7 +547,7 @@ def _cc_sweep_fused(edges, label, n_parts=None, broadcast_label=False,
     plan this form defeats exchange reuse across the duplicated label
     subtrees (measured 10 → 85 jobs), so cc_fixed keeps :func:`_cc_sweep`.
 
-    ``single`` (tiny pair sets, gated by CC_SINGLE_PARTITION_EDGE_LIMIT in
+    ``single`` (tiny pair sets, gated by fits_single_partition in
     cc_converged): both frames live on ONE stats-clamped partition, so the
     hinted ShuffledHashJoin and the group-min plan ZERO exchanges and zero
     broadcast-BUILD jobs — each sweep is one narrow task instead of a
@@ -630,25 +625,16 @@ def cc_converged(pairs, max_sweeps: int = 200):
     broadcast_ok = n_edges <= 2 * CC_BROADCAST_PAIR_LIMIT
     # Tiny pair sets (the near-dup regime at test scale, and any
     # incremental batch): run the whole loop on ONE stats-clamped
-    # partition — hinted ShuffledHashJoin + group-min with ZERO exchanges
-    # and zero broadcast-build jobs, one narrow job per sweep (the
-    # plans/la.py single-partition pattern: the coalesce(1) after each
-    # barrier restores the SinglePartition badge an AQE-wrapped
-    # checkpoint drops, and limit(n_edges) — an identity, labels ≤ nodes
-    # ≤ edges rows — clamps the size estimate EnsureRequirements would
-    # otherwise re-shuffle on).  Larger sets keep the broadcast/shuffle
-    # regimes unchanged; the gate is row-count based, so at 100 TB the
-    # corpus-scale pair sets never take the serial path.
-    single = n_edges <= CC_SINGLE_PARTITION_EDGE_LIMIT
+    # partition (operators.core.clamp_single), one narrow job per sweep
+    # with zero broadcast-build jobs.  cap = n_edges: labels ≤ nodes ≤
+    # edges rows.
+    single = fits_single_partition(n_edges)
     pairs.unpersist()
     if single:
         cap = int(n_edges)
-        edges = edges.coalesce(1).transform(_barrier).coalesce(1).limit(cap)
+        edges = checkpoint_single(edges, cap)
         nodes = edges.select(F.col("u").alias("node")).distinct()
-        label = (
-            nodes.withColumn("lbl", F.col("node"))
-            .transform(_barrier).coalesce(1).limit(cap)
-        )
+        label = checkpoint_single(nodes.withColumn("lbl", F.col("node")), cap)
     else:
         if not broadcast_ok:
             edges = edges.repartition(n_parts, "v").transform(_barrier)
@@ -673,9 +659,8 @@ def cc_converged(pairs, max_sweeps: int = 200):
             label = _cc_sweep_fused(
                 edges, label, n_parts,
                 broadcast_label=broadcast_ok and not single, single=single,
-            ).transform(_barrier)
-            if single:
-                label = label.coalesce(1).limit(cap)
+            )
+            label = checkpoint_single(label, cap) if single else label.transform(_barrier)
         done += todo
         s = label.agg(
             F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")

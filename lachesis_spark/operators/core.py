@@ -74,6 +74,56 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     return out
 
 
+# Row count at or under which a loop operator runs on ONE stats-clamped
+# partition (~12 MB of two-column rows).  Read at call time by
+# fits_single_partition so a test can force the partitioned path.
+SINGLE_PARTITION_ROWS = 1 << 19
+
+
+def fits_single_partition(rows: int) -> bool:
+    """The one size gate of the single-partition loop regime: ``rows`` is
+    the largest frame the loop will hold (a measured or algebraic row
+    count, never a guess), so corpus-scale inputs keep their partitioned
+    plans."""
+    return rows <= SINGLE_PARTITION_ROWS
+
+
+def clamp_single(df: DataFrame, cap: int) -> DataFrame:
+    """Badge ``df`` as SinglePartition and reset its size estimate.
+
+    Loop operators under :func:`fits_single_partition` keep every frame on
+    one partition, so their hinted ShuffledHashJoins and group-bys satisfy
+    any clustered distribution and plan ZERO exchanges — each sweep is one
+    narrow job instead of an AQE stage cascade.  Two things break that on
+    Spark 4.1, and this helper undoes both:
+
+    - ``coalesce(1)`` re-asserts the SinglePartition badge.  A checkpoint
+      of an AQE-wrapped plan (anything with a join or aggregate) captures
+      UnknownPartitioning, which makes EnsureRequirements shuffle the next
+      step's joins.  On a one-partition frame coalesce is a free narrow
+      node.
+    - ``limit(cap)`` resets the size estimate.  A checkpointed LogicalRDD
+      inherits the pre-checkpoint estimate (join estimates multiply per
+      step; a corpus-derived Gram carries its join blow-up), and
+      EnsureRequirements re-shuffles any SinglePartition child whose
+      estimate exceeds ``spark.sql.maxSinglePartitionBytes``.  ``limit``
+      substitutes a truthful row-count estimate.
+
+    Precondition: ``cap`` is an algebraic bound on the frame's row count
+    (e.g. 2m for a doubled edge list, n² for an n×n matrix).  The limit is
+    then a semantic no-op; a smaller ``cap`` truncates rows SILENTLY, which
+    the regime-agreement tests (gate at default vs 0) are there to catch.
+    """
+    return df.coalesce(1).limit(cap)
+
+
+def checkpoint_single(df: DataFrame, cap: int, eager: bool = False) -> DataFrame:
+    """:func:`barrier` for the single-partition regime: land ``df`` on one
+    partition, checkpoint it, and :func:`clamp_single` the result (the
+    checkpoint drops the badge and keeps the stale estimate)."""
+    return clamp_single(barrier(df.coalesce(1), eager), cap)
+
+
 def selection(
     df: DataFrame,
     pred: ColumnLike | None = None,

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from lachesis_spark.plans.iterative import PR_MOD, _edges
 
 from lachesis_spark.operators.core import barrier as _barrier
+from lachesis_spark.operators.core import checkpoint_single, fits_single_partition
 
 TOP_PAIRS = 20
 
@@ -388,14 +389,6 @@ KCORE_ORACLE_DEPTH = 16  # unroll budget; > observed peel depth (≤5) at every
 #                          Spark side is depth-independent), never pass silently
 
 
-#  Doubled-edge row count at or under which the graph loops run on a
-#  single stats-clamped partition (~12 MB of edge rows): exchange-free
-#  hinted hash joins, one narrow job per sweep — the plans/la.py /
-#  dedup.cc_converged pattern.  Corpus-scale graphs keep the partitioned
-#  paths (the gate is an actual row count, never a guess).
-GRAPH_SINGLE_PARTITION_EDGE_LIMIT = 1 << 19
-
-
 def kcore_layers(
     und: DataFrame, k: int, n_parts: int = 32, m: int | None = None
 ) -> DataFrame:
@@ -423,20 +416,14 @@ def kcore_layers(
     ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
+    small = m is not None and fits_single_partition(2 * m)
     if small:
-        # single-partition regime: every sweep join/aggregate plans zero
-        # exchanges (hinted hash join over stats-clamped SinglePartition
-        # frames; limit(2m) is an identity — the doubled edge list is
-        # exactly 2m rows, alive/layer frames at most that), so a sweep
-        # is ONE narrow job (its exit count) instead of an AQE stage
-        # cascade per checkpoint.
+        # single-partition regime (operators.core.clamp_single).  cap =
+        # the doubled edge list's exactly 2m rows; alive/layer frames hold
+        # at most that.
         cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier, eager=True).coalesce(1).limit(cap)
-        alive = (
-            e.select(F.col("u").alias("node")).distinct()
-            .transform(_barrier).coalesce(1).limit(cap)
-        )
+        e = checkpoint_single(ee, cap, eager=True)
+        alive = checkpoint_single(e.select(F.col("u").alias("node")).distinct(), cap)
     else:
         e = ee.repartition(n_parts, "v").transform(_barrier, eager=True)
         alive = (
@@ -471,7 +458,7 @@ def kcore_layers(
             "node", (F.coalesce(F.col("d"), F.lit(0)) >= k).alias("keep")
         )
         if small:
-            ann = ann.transform(_barrier).coalesce(1).limit(cap)
+            ann = checkpoint_single(ann, cap)
         else:
             ann = ann.repartition(n_parts, "node").transform(_barrier)
         n_removed = ann.filter(~F.col("keep")).count()
@@ -483,10 +470,7 @@ def kcore_layers(
         if layers is None:
             layers = removed
         elif small:
-            layers = (
-                layers.unionByName(removed)
-                .coalesce(1).transform(_barrier).coalesce(1).limit(cap)
-            )
+            layers = checkpoint_single(layers.unionByName(removed), cap)
         else:
             layers = layers.unionByName(removed).transform(_barrier)
         alive = ann.filter(F.col("keep")).select("node")
@@ -573,12 +557,12 @@ def sssp_hops(
     ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
+    small = m is not None and fits_single_partition(2 * m)
     if small:
         # single-partition regime (see kcore_layers); the seed frame is
         # range-based so its stats are truthful from the start.
         cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier, eager=True).coalesce(1).limit(cap)
+        e = checkpoint_single(ee, cap, eager=True)
         dist = spark.range(1).select(
             F.lit(src).cast("long").alias("node"),
             F.lit(0).cast("long").alias("dist"),
@@ -621,12 +605,8 @@ def sssp_hops(
             nxt = nxt.join(
                 pa.hint("shuffle_hash") if small else pa, "node", "left_anti"
             )
-        nxt = (
-            nxt.select("node", F.lit(level).cast("long").alias("dist"))
-            .transform(_barrier)
-        )
-        if small:
-            nxt = nxt.coalesce(1).limit(cap)
+        nxt = nxt.select("node", F.lit(level).cast("long").alias("dist"))
+        nxt = checkpoint_single(nxt, cap) if small else nxt.transform(_barrier)
         if nxt.count() == 0:  # one bounded action per level — the exit check
             break
         dist = dist.unionByName(nxt)
@@ -720,17 +700,17 @@ def lpa_labels(
     ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
+    small = m is not None and fits_single_partition(2 * m)
     if small:
         # single-partition regime (see kcore_layers): the 4-round lazy
         # chain plans zero exchanges, so the caller's one action runs it
         # as one narrow job cascade with no per-checkpoint AQE stage jobs.
         cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier).coalesce(1).limit(cap)
-        lab = (
+        e = checkpoint_single(ee, cap)
+        lab = checkpoint_single(
             e.select(F.col("u").alias("node")).distinct()
-            .select("node", F.col("node").alias("lbl"))
-            .transform(_barrier).coalesce(1).limit(cap)
+            .select("node", F.col("node").alias("lbl")),
+            cap,
         )
     else:
         e = ee.repartition(n_parts, "v").transform(_barrier)
@@ -754,7 +734,7 @@ def lpa_labels(
             .select("node", (-F.col("s.neg")).alias("lbl"))
         )
         if small:
-            lab = lab.transform(_barrier).coalesce(1).limit(cap)
+            lab = checkpoint_single(lab, cap)
         else:
             lab = lab.repartition(n_parts, "node").transform(_barrier)
     return lab

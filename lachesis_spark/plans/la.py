@@ -3,34 +3,29 @@
 '*, add/subtract, scale, max/min element, rowMax/rowMin/colMax/colMin,
 rowSum/colSum, duplicateRow/duplicateCol —
 src/linearAlgebraDSL/source/LAEvaluateFunctions.cc:256-341) re-expressed on
-DataFrames in two representations:
+DataFrames in COO form (i, j, v): element-wise ops as joins/aggregations,
+multiply as an equi-join on the inner index plus a group-sum — the
+reference's JoinComp+AggregateComp plan.  The oracle-gated queries use the
+same form (DuckDB can unnest the same data).
 
-1. **COO** (i, j, v) — element-wise ops as joins/aggregations.  Used for the
-   driver's oracle-gated queries (DuckDB can unnest the same data).
-2. **Block** (row_blk, col_blk, rows, cols, data) — the reference's
-   MatrixBlock model (block ids + dense double block,
-   LAEvaluateFunctions.cc:19-30): multiply = equi-join on the inner block
-   index + numpy GEMM per pair + aggregate-sum of partial blocks, exactly the
-   reference's JoinComp+AggregateComp plan but with Arrow-batched pandas UDFs
-   doing the dense math.
-
-Scale: block matmul shuffles on (row_blk, col_blk) with combine-side partial
-sums — the same dataflow the reference runs distributed; block size (e.g.
-1000×1000 doubles = 8 MB) keeps any single task's working set bounded, and
-Catalyst broadcasts the smaller operand's blocks when one matrix is thin.
+Scale: matmul shuffles on the inner index with combine-side partial sums —
+the same dataflow the reference runs distributed — and Catalyst broadcasts
+the smaller operand when one matrix is thin.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lachesis_spark.binding import base_table
 
 from lachesis_spark.operators.core import barrier as _barrier
+from lachesis_spark.operators.core import (
+    checkpoint_single,
+    clamp_single,
+    fits_single_partition,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -248,15 +243,14 @@ def inverse_newton(
     if n is None:
         mx = a.agg(F.max("i").alias("mi"), F.max("j").alias("mj")).first()
         n = int(max(mx["mi"], mx["mj"])) + 1
-    # a reduced-dim iterate (n² COO rows ≲ 8 MB) runs the single-partition
-    # exchange-free loop; a distributed-scale matrix shuffles.
-    small = (n * n) <= (1 << 18)
+    # a reduced-dim iterate runs the single-partition exchange-free loop
+    # (operators.core.clamp_single) on the tagged pair frame below — M and
+    # Q at most n² rows each plus the identity's n; a distributed-scale
+    # matrix shuffles.
+    cap = 2 * n * n + n
+    small = fits_single_partition(2 * n * n)
     if small:
-        # SinglePartition badge + truthful size estimate for every probe
-        # and for M₀'s lineage (the checkpointed LogicalRDD inherits the
-        # pre-checkpoint join-blowup estimate — see the stats-reset note
-        # below).  coalesce(1) on a reduced-dim frame is a narrow no-op.
-        a = a.coalesce(1).limit(n * n)
+        a = clamp_single(a, n * n)
     norms = (
         a.select(
             F.col("i"), F.col("j"), F.abs(F.col("v")).alias("av")
@@ -327,10 +321,10 @@ def inverse_newton(
         )
         if small:
             # hinted SHUFFLED-HASH join: both sides are SinglePartition
-            # (the pair frame is coalesce(1)+checkpointed, and checkpoint
-            # preserves output partitioning), which satisfies the join's
-            # clustered distribution — so the hint plans a hash join with
-            # NO exchange AND no broadcast-build job.  The earlier
+            # (the pair frame comes out of checkpoint_single), which
+            # satisfies the join's clustered distribution — so the hint
+            # plans a hash join with NO exchange AND no broadcast-build
+            # job.  The earlier
             # broadcast hint avoided the exchanges too but paid one
             # detached build JOB per step (~0.3-0.5 s of pure job-launch
             # overhead on a reduced-dim matrix); unhinted, Catalyst plans
@@ -346,23 +340,12 @@ def inverse_newton(
         u = mq.withColumn("v", F.col("v") * (2.0 * c)).unionByName(prod_terms)
         if small:
             # single-partition frames satisfy any clustered distribution,
-            # so the group-sum plans NO exchange: every step of the chunk
-            # runs inside one narrow stage chain instead of paying a
-            # shuffle stage (plus an AQE re-plan) per step.  coalesce is
-            # itself narrow; reduced-dim means ≤ 2n² + n rows per task.
-            # The trailing limit (same 2n²+n algebraic row bound — a
-            # semantic no-op) clamps the step's SIZE ESTIMATE: join
-            # estimates multiply per step, and without the clamp the
-            # second step of a chunk is already past
-            # spark.sql.maxSinglePartitionBytes, which makes Spark 4.1's
-            # EnsureRequirements re-shuffle the SinglePartition inputs
-            # (measured: 2-step chunk plan 0 → 2 Exchanges, 11 by the
-            # next chunk, ~5 AQE construction jobs per lazy checkpoint).
-            return (
-                u.coalesce(1)
-                .groupBy("t", "i", "j")
-                .agg(F.sum("v").alias("v"))
-                .limit(2 * n * n + n)
+            # so the group-sum plans NO exchange; the clamp's stats reset
+            # matters mid-chunk too (join estimates multiply per step —
+            # measured 0 → 2 Exchanges by a chunk's second step without it).
+            return clamp_single(
+                u.coalesce(1).groupBy("t", "i", "j").agg(F.sum("v").alias("v")),
+                cap,
             )
         u = u.repartition(n_parts, "i", "j")
         return u.groupBy("t", "i", "j").agg(F.sum("v").alias("v"))
@@ -424,29 +407,7 @@ def inverse_newton(
     # fused_step group-sum is exchange-free (see fused_step).
     # LAZY checkpoint: the next probe's aggregation materializes it, so
     # checkpointing costs no job of its own (same below, per chunk).
-    #
-    # STATS RESET (the `.limit` after each checkpoint): a localCheckpoint
-    # LogicalRDD inherits the PRE-checkpoint plan's size ESTIMATE — for a
-    # corpus-derived Gram that is the un-aggregated join-blowup figure
-    # (hundreds of GiB for a 4096-row frame).  Spark 4.1's
-    # EnsureRequirements re-shuffles any SinglePartition child whose
-    # estimated size exceeds spark.sql.maxSinglePartitionBytes (128 MB),
-    # so the garbage estimate silently defeats the whole exchange-free
-    # single-partition plan AND makes every lazy checkpoint pay its AQE
-    # stage jobs at CONSTRUCTION time (measured: la_inverse_identity 39
-    # construction jobs, 4.7 s).  limit(k) with k >= the frame's exact
-    # algebraic row bound (M and Q are each at most n² entries, plus the
-    # identity's n) is a semantic no-op that injects a truthful
-    # rowCount-based estimate while keeping the captured SinglePartition.
-    # The post-checkpoint coalesce(1) re-asserts SinglePartition: a
-    # checkpoint taken of any AQE-wrapped plan (anything with a join or
-    # aggregate gets wrapped, exchanges or not) captures
-    # UnknownPartitioning, which would force EnsureRequirements to
-    # shuffle the next chunk's single-partition joins.  Coalesce on a
-    # 1-partition RDD is a free narrow node that restores the badge.
-    mq = (mq.coalesce(1) if small else mq).transform(_barrier)
-    if small:
-        mq = mq.coalesce(1).limit(2 * n * n + n)
+    mq = checkpoint_single(mq, cap) if small else mq.transform(_barrier)
     stats["checkpoints"] += 1
     plain_applied = False  # did the last executed step use c == 1.0?
     while stats["steps"] < iters:
@@ -516,14 +477,10 @@ def inverse_newton(
         # bound codegen depth at ONE step while the chunk still costs a
         # single ACTION (the next probe materializes the whole pending
         # RDD chain inside one job cascade): measured 4.4 → 2.9 s at
-        # chunk 2.  The coalesce(1)+limit after each checkpoint restores
-        # the SinglePartition badge (an AQE-wrapped plan's checkpoint
-        # captures UnknownPartitioning) and re-clamps the size estimate.
+        # chunk 2.
         for c in cs:
             mq = fused_step(mq, c)
-            mq = mq.transform(_barrier)
-            if small:
-                mq = mq.coalesce(1).limit(2 * n * n + n)
+            mq = checkpoint_single(mq, cap) if small else mq.transform(_barrier)
         stats["steps"] += len(cs)
         stats["checkpoints"] += 1
         plain_applied = cs[-1] == 1.0
@@ -584,94 +541,6 @@ def duplicate_row(row_vec: DataFrame, n: int) -> DataFrame:
         F.col("j"),
         F.col("v"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Block representation (reference MatrixBlock: block ids + dense data)
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("row_blk", T.IntegerType()),
-        T.StructField("col_blk", T.IntegerType()),
-        T.StructField("rows", T.IntegerType()),
-        T.StructField("cols", T.IntegerType()),
-        T.StructField("data", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def block_matmul(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Block GEMM: join A.col_blk == B.row_blk, numpy-multiply each block
-    pair (Arrow-batched), then sum partial blocks per output (row_blk,
-    col_blk) — the reference's exact plan (LAEvaluateFunctions.cc:213-341)
-    with Tungsten shuffle + pandas UDF GEMM.
-    """
-    import pandas as pd  # noqa: F401
-
-    paired = a.select(
-        F.col("row_blk"), F.col("col_blk").alias("k"), F.col("rows").alias("a_rows"),
-        F.col("cols").alias("a_cols"), F.col("data").alias("a_data"),
-    ).join(
-        b.select(
-            F.col("row_blk").alias("k2"), F.col("col_blk"), F.col("rows").alias("b_rows"),
-            F.col("cols").alias("b_cols"), F.col("data").alias("b_data"),
-        ),
-        F.col("k") == F.col("k2"),
-    )
-
-    def gemm(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                am = np.asarray(r.a_data, dtype=np.float64).reshape(r.a_rows, r.a_cols)
-                bm = np.asarray(r.b_data, dtype=np.float64).reshape(r.b_rows, r.b_cols)
-                cm = am @ bm
-                outs.append(
-                    (r.row_blk, r.col_blk, cm.shape[0], cm.shape[1], cm.ravel().tolist())
-                )
-            yield pd.DataFrame(
-                outs, columns=["row_blk", "col_blk", "rows", "cols", "data"]
-            )
-
-    partial = paired.mapInPandas(gemm, schema=BLOCK_SCHEMA)
-
-    def merge_blocks(pdf):
-        import numpy as np
-        import pandas as pd
-
-        acc = np.zeros(len(pdf.iloc[0]["data"]), dtype=np.float64)
-        for d in pdf["data"]:
-            acc += np.asarray(d, dtype=np.float64)
-        first = pdf.iloc[0]
-        return pd.DataFrame(
-            [(first["row_blk"], first["col_blk"], first["rows"], first["cols"],
-              acc.tolist())],
-            columns=["row_blk", "col_blk", "rows", "cols", "data"],
-        )
-
-    return partial.groupBy("row_blk", "col_blk").applyInPandas(
-        merge_blocks, schema=BLOCK_SCHEMA
-    )
-
-
-def block_transpose(a: DataFrame) -> DataFrame:
-    """Transpose block ids and each dense block (numpy per block)."""
-    def tr(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                m = np.asarray(r.data, dtype=np.float64).reshape(r.rows, r.cols).T
-                outs.append((r.col_blk, r.row_blk, m.shape[0], m.shape[1], m.ravel().tolist()))
-            yield pd.DataFrame(outs, columns=["row_blk", "col_blk", "rows", "cols", "data"])
-
-    import pandas as pd  # noqa: F401
-
-    return a.mapInPandas(tr, schema=BLOCK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -794,7 +663,7 @@ def la_inverse_identity(spark, sf_dir):
     # clamped pair frame; gi re-badges the checkpointed Gram), so the
     # hinted hash join and the (i, j) group-sum plan zero exchanges and
     # no broadcast-build job.
-    gi = g.coalesce(1).limit(64 * 64)
+    gi = clamp_single(g, 64 * 64)
     prod = matmul(
         inverse_newton(g, n=64, spd=True, materialized=True), gi,
         hint_shuffle_hash=True,
@@ -882,21 +751,16 @@ def la_power_iteration(spark, sf_dir):
     # A larger d keeps the session-width broadcast-join path below.
     # v's key is created as INT to match the Gram's posexplode index type:
     # join keys stay cast-free and the output schema is unchanged.
-    small = (d * d) <= (1 << 18)
+    small = fits_single_partition(2 * d * d)
     if small:
-        # range-based init (v is a constant vector): precise tiny stats,
-        # already effectively single-partition after coalesce.
-        v = spark.range(d).select(
+        # range-based init (v is a constant vector); the Gram is d² rows
+        # (operators.core.clamp_single: the stats reset matters most here,
+        # the checkpointed Gram carries the corpus join-blowup estimate).
+        v = checkpoint_single(spark.range(d).select(
             F.col("id").cast("int").alias("j"),
             F.lit(1.0 / math.sqrt(d)).alias("x"),
-        ).coalesce(1).transform(_barrier)
-        # STATS RESET (see inverse_newton): the checkpointed Gram inherits
-        # the corpus join-blowup size estimate, and Spark 4.1's
-        # EnsureRequirements re-shuffles SinglePartition children it
-        # believes exceed spark.sql.maxSinglePartitionBytes — limit(d²)
-        # (the Gram's exact dense cardinality) is a semantic no-op that
-        # restores a truthful estimate and keeps the loop exchange-free.
-        gj = g.coalesce(1).transform(_barrier).limit(d * d)
+        ), d)
+        gj = checkpoint_single(g, d * d)
     else:
         gj = g
         v = spark.createDataFrame(
@@ -910,17 +774,12 @@ def la_power_iteration(spark, sf_dir):
             .agg(F.sum(F.col("v") * F.col("x")).alias("x"))
         )
         if small:
-            # lazy ckpt: no per-step action; limit(d) = the iterate's
-            # exact cardinality, re-applying the stats reset per step.
-            # post-ckpt coalesce(1): the ckpt of this (AQE-wrapped — it
-            # holds a join+agg+window) plan captures UnknownPartitioning;
-            # the free narrow coalesce restores the SinglePartition badge
-            # so the next iteration keeps planning exchange-free.
-            v = gv.select(
+            # lazy ckpt: no per-step action; the iterate is d rows.
+            v = checkpoint_single(gv.select(
                 F.col("i").alias("j"),
                 (F.col("x") / F.sqrt(F.sum(F.col("x") * F.col("x")).over(w_all)))
                 .alias("x"),
-            ).transform(_barrier).coalesce(1).limit(d)
+            ), d)
         else:
             nrm = gv.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nrm"))
             v = (

@@ -57,3 +57,25 @@ def assert_matches_oracle(spark_df, duck_con, sql):
     dcols = [d[0] for d in res.description]
     assert sorted(scols) == sorted(dcols), f"columns {sorted(scols)} != {sorted(dcols)}"
     assert canon(srows, scols) == canon(drows, dcols)
+
+
+def record_single_checkpoints(monkeypatch, module):
+    """Frames ``module`` hands to ``checkpoint_single`` — its loop steps, in
+    call order.  The real helper still runs on each of them."""
+    frames = []
+    real = module.checkpoint_single
+
+    def record(df, cap, eager=False):
+        frames.append(df)
+        return real(df, cap, eager)
+
+    monkeypatch.setattr(module, "checkpoint_single", record)
+    return frames
+
+
+def assert_exchange_free(df):
+    """The single-partition regime's plan shape: the executed plan of ``df``
+    holds no Exchange of any kind and at least one ShuffledHashJoin."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "ShuffledHashJoin" in plan, plan

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import functions as F
 
 from lachesis_spark.llm import dedup as D
+from lachesis_spark.operators import core
+from tests.conftest import assert_exchange_free, record_single_checkpoints
 
 
 def _chain_pairs(spark, n):
@@ -123,18 +125,48 @@ def test_cc_sweep_exchanges_are_pair_set_width(spark):
 
 
 def test_cc_converged_shuffle_and_broadcast_paths_agree(spark, monkeypatch):
-    """The size gate picks broadcast sweeps for reduced pair sets and
-    co-partitioned shuffle sweeps for corpus-scale ones; both must produce
-    identical labelings (forced here by zeroing the gate)."""
+    """The size gates pick single-partition sweeps for tiny pair sets,
+    broadcast sweeps for reduced ones and co-partitioned shuffle sweeps for
+    corpus-scale ones; all three must produce identical labelings (forced
+    here by zeroing the gates).  The sweep regime each run took is recorded,
+    so the comparison cannot collapse onto one path."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (4, 10)],
         "a_id bigint, b_id bigint",
     )
-    bc = {r["doc_id"]: r["canonical_id"] for r in D.cc_converged(pairs).collect()}
+    regimes = set()
+    real_sweep = D._cc_sweep_fused
+
+    def sweep(edges, label, n_parts=None, broadcast_label=False, single=False):
+        regimes.add("single" if single else "broadcast" if broadcast_label else "shuffle")
+        return real_sweep(edges, label, n_parts, broadcast_label, single)
+
+    monkeypatch.setattr(D, "_cc_sweep_fused", sweep)
+
+    def labels():
+        regimes.clear()
+        out = {r["doc_id"]: r["canonical_id"] for r in D.cc_converged(pairs).collect()}
+        return regimes.copy(), out
+
+    took_single, single = labels()
+    monkeypatch.setattr(core, "SINGLE_PARTITION_ROWS", 0)
+    took_bc, bc = labels()
     monkeypatch.setattr(D, "CC_BROADCAST_PAIR_LIMIT", 0)
-    sh = {r["doc_id"]: r["canonical_id"] for r in D.cc_converged(pairs).collect()}
-    assert bc == sh
-    assert set(bc.values()) == {1, 20}
+    took_sh, sh = labels()
+    assert (took_single, took_bc, took_sh) == ({"single"}, {"broadcast"}, {"shuffle"})
+    assert single == bc == sh
+    assert set(single.values()) == {1, 20}
+
+
+def test_cc_sweep_plan_is_exchange_free(spark, monkeypatch):
+    """A tiny pair set's CC sweep runs on one stats-clamped partition: the
+    last sweep's plan (its label estimate compounds per sweep without the
+    clamp) has no Exchange and joins by ShuffledHashJoin."""
+    steps = record_single_checkpoints(monkeypatch, D)
+    labels = D.cc_converged(_chain_pairs(spark, 12)).collect()
+    assert len(labels) == 13
+    assert len(steps) > 4  # edges, initial labels, then the sweeps
+    assert_exchange_free(steps[-1])
 
 
 def test_cc_incremental_equals_full_recompute(spark):

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
+from lachesis_spark.operators import core
 from lachesis_spark.plans import graph_algos as G
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_exchange_free, record_single_checkpoints
 
 
 def _und(spark):
@@ -200,3 +202,51 @@ def test_lpa_communities_partition_the_nodes(spark):
     assert lab.count() == n_nodes  # every node labeled exactly once
     hist = graph_lpa(spark, sf).toPandas()
     assert int((hist.csize * hist.n_communities).sum()) == n_nodes
+
+
+# The three gated sweep loops, each run to its result rows on an
+# undirected edge frame with m rows (n_parts only shapes the partitioned
+# path).  k-core peels at the mean degree, as graph_kcore does.
+def _kcore(und, m):
+    n = und.select(F.col("a").alias("v")).union(und.select("b")).distinct().count()
+    return G.kcore_layers(und, k=2 * m // n, n_parts=4, m=m)
+
+
+LOOPS = {
+    "kcore": _kcore,
+    "sssp": lambda und, m: G.sssp_hops(
+        und, int(und.agg(F.min("a")).first()[0]), n_parts=4, m=m
+    ),
+    "lpa": lambda und, m: G.lpa_labels(und, rounds=2, n_parts=4, m=m),
+}
+
+
+def _smoke_und(spark):
+    und = G.undirected_edges(spark, SF_SMOKE).localCheckpoint(eager=True)
+    return und, und.count()
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_single_partition_and_partitioned_regimes_agree(spark, monkeypatch, loop):
+    """The size gate at its default runs the loop on one stats-clamped
+    partition; at 0 it takes the partitioned path.  Identical rows prove
+    the clamp's cap never truncated a frame."""
+    und, m = _smoke_und(spark)
+    single = sorted(LOOPS[loop](und, m).collect())
+    monkeypatch.setattr(core, "SINGLE_PARTITION_ROWS", 0)
+    partitioned = sorted(LOOPS[loop](und, m).collect())
+    assert single == partitioned
+    assert len({tuple(r)[1] for r in single}) > 1  # the loop really iterated
+
+
+def test_lpa_sweep_plan_is_exchange_free(spark, monkeypatch):
+    """On the single-partition path the last LPA round's plan reads the
+    previous round's checkpoint with no Exchange and a ShuffledHashJoin —
+    the badge and the stats reset both hold across checkpoints.  (The
+    k-core and SSSP sweeps still pay hash Exchanges mid-sweep: an aliased
+    aggregate drops the SinglePartition badge before their second join.)"""
+    und, m = _smoke_und(spark)
+    steps = record_single_checkpoints(monkeypatch, G)
+    G.lpa_labels(und, rounds=2, m=m).collect()
+    assert len(steps) == 4  # edges, initial labels, two rounds
+    assert_exchange_free(steps[-1])

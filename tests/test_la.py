@@ -6,8 +6,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from lachesis_spark.operators import core
 from lachesis_spark.plans import la, la_dsl
-from tests.conftest import SF_SMOKE, canon
+from tests.conftest import SF_SMOKE, assert_exchange_free, canon, record_single_checkpoints
 
 
 def test_inverse_times_matrix_is_identity(spark):
@@ -231,3 +232,60 @@ def test_power_iteration_matches_numpy_replication(spark):
     assert abs(out.eigval.iloc[0] - v @ G @ v) < 1e-4
     # power iteration on an SPD matrix: Rayleigh quotient is non-decreasing
     assert all(b >= a - 1e-9 for a, b in zip(rayleighs, rayleighs[1:]))
+
+
+def _dense(x, n):
+    import numpy as np
+
+    out = np.zeros((n, n))
+    keys = set()
+    for r in x.collect():
+        keys.add((int(r["i"]), int(r["j"])))
+        out[int(r["i"]), int(r["j"])] = r["v"]
+    return keys, out
+
+
+@pytest.mark.parametrize("spd", [True, False])
+def test_inverse_newton_regimes_agree(spark, monkeypatch, spd):
+    """The size gate at its default runs the Newton loop on one
+    stats-clamped partition; at 0 it takes the partitioned path.  The same
+    entries and values (to summation-order rounding) prove the clamp's cap
+    never truncated the pair frame."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    n = 12
+    m = rng.uniform(-1.0, 1.0, (n, n))
+    m = (m + m.T if spd else m) + n * np.eye(n)
+    a = spark.createDataFrame(
+        [(i, j, float(m[i, j])) for i in range(n) for j in range(n)],
+        "i bigint, j bigint, v double",
+    )
+    keys, single = _dense(la.inverse_newton(a, n=n, spd=spd), n)
+    monkeypatch.setattr(core, "SINGLE_PARTITION_ROWS", 0)
+    keys_p, partitioned = _dense(la.inverse_newton(a, n=n, spd=spd), n)
+    assert keys == keys_p
+    assert np.allclose(single, partitioned, rtol=0, atol=1e-10)
+    assert np.abs(single @ m - np.eye(n)).max() < 1e-8
+
+
+def test_newton_step_plan_is_exchange_free(spark, monkeypatch):
+    """On the embedding Gram (whose checkpoint carries the corpus join's
+    size estimate) the last Newton step's plan reads the previous step's
+    checkpoint with no Exchange and a ShuffledHashJoin."""
+    g = la.gram(la.coo_from_embeddings(spark, SF_SMOKE, limit=200)).localCheckpoint(
+        eager=True
+    )
+    steps = record_single_checkpoints(monkeypatch, la)
+    la.inverse_newton(g, n=64, spd=True, iters=3, materialized=True).collect()
+    assert len(steps) == 4  # the pair frame, then one per step
+    assert_exchange_free(steps[-1])
+
+
+def test_power_iteration_step_plan_is_exchange_free(spark, monkeypatch):
+    """The last power-iteration step joins the clamped Gram with the
+    previous step's checkpointed iterate: no Exchange, a ShuffledHashJoin."""
+    steps = record_single_checkpoints(monkeypatch, la)
+    la.la_power_iteration(spark, SF_SMOKE)
+    assert len(steps) == 2 + la.POWER_ITERS  # v₀, the Gram, one per step
+    assert_exchange_free(steps[-1])
