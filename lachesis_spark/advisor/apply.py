@@ -19,7 +19,9 @@ it means persisting the recommendation next to the data where
 :func:`hinted_join` (and any other consumer) finds it — the exact analog of
 the reference distributing its learned partition lambda with the set.
 
-Measured end-to-end in tools/advisor_closed_loop.py → ADVISOR_DEMO.md.
+Measured end-to-end by ``tools/advisor_bench.py loop`` (every apply kind on
+its own workload) and ``tools/advisor_bench.py registry`` (the whole
+registry, flat vs placed) → ADVISOR_DEMO.md.
 """
 
 from __future__ import annotations

@@ -3,6 +3,8 @@ payoff: bucketed tables join/aggregate without a shuffle Exchange."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -913,11 +915,11 @@ def test_read_set_pruned_multi_prunes_both_dimensions(spark, tmp_path):
 
 def test_record_registry_captures_real_workload_history(spark):
     """Round-9: the advisor's history can be populated from the REAL
-    registry workload (tools/advisor_from_bench.py) — job rows carry
+    registry workload (tools/advisor_bench.py) — job rows carry
     runtimes, plan-captured usages name the base tables (never part-file
     paths), and advise() produces a recommendation from nothing but that
     recorded history."""
-    from tools.advisor_from_bench import record_registry
+    from tools.advisor_bench import record_registry
 
     from lachesis_spark.advisor import HistoryDB, advise
 
@@ -929,6 +931,11 @@ def test_record_registry_captures_real_workload_history(spark):
     assert set(timings) == {"tpch_q12", "tpch_q04", "tpch_q06"}
     n_jobs = h.con.execute("SELECT count(*) FROM jobs").fetchone()[0]
     assert n_jobs == 4  # 3 queries + the load_base_tables scan-shape job
+    li = Path(SF_SMOKE, "lineitem.parquet")
+    files = [li] if li.is_file() else list(li.rglob("*.parquet"))
+    n_files, n_bytes, _ = h.scan_profile("lineitem")
+    assert n_files == len(files)
+    assert n_bytes == sum(f.stat().st_size for f in files) > 1
     datasets = set(h.datasets())
     assert "lineitem" in datasets
     assert not any(d.startswith("part-") for d in datasets)
@@ -1222,7 +1229,7 @@ def test_paired_stats_detects_uniform_speedup():
     """Paired measurement statistics: a uniform 25% placed-side win must
     produce a CI bracketing x1.25, all-wins, and agreeing order-split
     halves (the tool's drift-cancellation report depends on all three)."""
-    from tools.advisor_workload_bench import paired_stats
+    from tools.advisor_bench import paired_stats
 
     names = [f"q{i:02d}" for i in range(40)]
     flat = {n: 1.0 + (i % 5) * 0.1 for i, n in enumerate(names)}
@@ -1247,7 +1254,7 @@ def test_run_paired_alternates_arm_order_and_compares_counts(
     for the parity check."""
     import lachesis_spark.registry as registry
     from lachesis_spark import binding
-    from tools.advisor_workload_bench import run_paired
+    from tools.advisor_bench import run_paired
 
     calls: list[tuple[str, str]] = []
 

@@ -14,6 +14,7 @@ len(QUERIES); the oracle count appears separately in the header prose.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -58,3 +59,35 @@ def test_coverage_header_names_a_matching_sweep_artifact():
         f"{m.group(1)} summaries {summaries[-2:]} != registry query "
         f"count {n} — regenerate the sweep"
     )
+
+
+def _docstrings(path: Path) -> str:
+    tree = ast.parse(path.read_text())
+    nodes = [tree] + [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    return "\n".join(filter(None, map(ast.get_docstring, nodes)))
+
+
+def test_cited_tools_exist():
+    """Every ``tools/<name>.py`` that the living docs, the verify recipe
+    and the docstrings under ``lachesis_spark/`` and ``tools/`` cite must
+    exist, so a merged or deleted script cannot leave a stale command
+    behind.  ADVISOR_DEMO.md and the round-numbered artifacts are
+    transcripts of past runs and are exempt."""
+    texts = {
+        name: (REPO / name).read_text()
+        for name in ("README.md", "COVERAGE.md", "SCALE.md",
+                     ".claude/skills/verify/SKILL.md")
+    }
+    for pkg in ("lachesis_spark", "tools"):
+        for py in sorted((REPO / pkg).rglob("*.py")):
+            texts[str(py.relative_to(REPO))] = _docstrings(py)
+    missing = sorted(
+        f"{name}: tools/{tool}"
+        for name, text in texts.items()
+        for tool in set(re.findall(r"\btools/(\w+\.py)\b", text))
+        if not (REPO / "tools" / tool).is_file()
+    )
+    assert not missing, f"cited tools that do not exist: {missing}"
